@@ -32,6 +32,11 @@ from swanlake_spark.plans import classify, split_statements, strip_select_locks
 from swanlake_spark.sources import register_tables
 
 
+# Static SQL confs in EngineConfig.spark_confs(): fixed once the JVM's
+# first session exists, so only the session builder can apply them.
+_STATIC_CONFS = {"spark.sql.warehouse.dir", "spark.sql.codegen.cache.maxEntries"}
+
+
 @dataclass
 class QueryResult:
     """Result of one SQL front-door call.
@@ -141,6 +146,23 @@ def apply_pivot_adjustments(
         res._requery = lambda: zero_fill(prev())
 
 
+@dataclass
+class PreparedSql:
+    """A statement after :meth:`Engine.prepare`: the text to run plus
+    the result-frame adjustments the dialect needs (PIVOT zero-fill and
+    renames, ``* REPLACE`` column order)."""
+
+    sql: str
+    pivot: tuple[list[str], dict] = ([], {})
+    replace_probe: str | None = None
+
+    def finish(self, engine: "Engine", res: QueryResult, args: list | None = None):
+        apply_pivot_adjustments(res, *self.pivot)
+        if self.replace_probe is not None:
+            engine._apply_replace_order(res, self.replace_probe, args)
+        return res
+
+
 class Engine:
     """A PySpark-native analytics engine with the reference's capability
     surface: SQL queries/DDL/DML over a Parquet warehouse, sessions,
@@ -166,8 +188,8 @@ class Engine:
         self.metrics = Metrics()
         # runtime confs (safe to apply on an externally provided session)
         for k, v in self.config.spark_confs().items():
-            if k == "spark.sql.warehouse.dir":
-                continue  # static conf; only honored at builder time
+            if k in _STATIC_CONFS:
+                continue  # only honored at builder time
             try:
                 self.spark.conf.set(k, v)
             except Exception:
@@ -230,44 +252,8 @@ class Engine:
         parameterized SQL (typed, injection-safe); statements the engine
         routes itself (DML rewrite, COPY, PRAGMA, ...) reject args — the
         session layer falls back to typed literal rendering there."""
-        pivot_zero_cols: list[str] = []
-        pivot_renames: dict = {}
-        replace_probe: str | None = None
-        if dialect == "duckdb":
-            from swanlake_spark.functions import transpile_duckdb
-            from swanlake_spark.functions.dialect import (
-                pivot_adjustments,
-                replace_position_probe,
-            )
-
-            # DuckDB zero-fills empty PIVOT count cells (Spark leaves
-            # them NULL — the cell NULL is produced by the pivot
-            # itself, so no SQL-text rewrite can fix it in place) and
-            # names single-ALIASED-aggregate pivot columns
-            # `<value>_<agg>` where Spark drops the agg alias. Collect
-            # both adjustments now, apply on the result frame below.
-            pivot_zero_cols, pivot_renames = pivot_adjustments(sql)
-            # `* REPLACE` keeps each replaced column at its original
-            # star position in DuckDB; the transpiled star-EXCEPT form
-            # appends them at the end. The probe (same statement, bare
-            # `*`) analyzes to DuckDB's column order; the result frame
-            # is reordered to it below (analysis only — never runs).
-            if re.search(r"\bCOLUMNS\s*\(", sql, re.IGNORECASE):
-                sql = self._expand_columns_star(sql)
-            if re.search(r"\bBY\s+NAME\b", sql, re.IGNORECASE):
-                sql = self._rewrite_union_by_name(sql)
-            probe_raw = replace_position_probe(sql)
-            if probe_raw is not None:
-                # a result-frame reorder can't reach DML: an INSERT
-                # binds its source select POSITIONALLY, so the
-                # end-position REPLACE columns would write swapped
-                # VALUES (ADVICE r11). Rewrite the DML's source select
-                # to the probe's column order before execution.
-                sql = self._reorder_replace_dml(sql)
-                probe_raw = replace_position_probe(sql)
-            sql = transpile_duckdb(sql)
-            if probe_raw is not None:
-                replace_probe = transpile_duckdb(probe_raw)
+        prep = self.prepare(sql, dialect)
+        sql = prep.sql
         t0 = time.perf_counter()
         with self.metrics.start_query():
             try:
@@ -290,10 +276,54 @@ class Engine:
             res._requery = (
                 lambda: self._run_script_swap_safe(sql, args=args).df
             )
-        apply_pivot_adjustments(res, pivot_zero_cols, pivot_renames)
-        if replace_probe is not None:
-            self._apply_replace_order(res, replace_probe, args)
-        return res
+        return prep.finish(self, res, args)
+
+    def prepare(self, sql: str, dialect: str | None = None) -> "PreparedSql":
+        """The dialect front door every statement surface shares
+        (``query``, the session API, prepared statements and the Flight
+        SQL schema probe). For ``dialect="duckdb"`` it runs the
+        schema-probe rewrites against this engine's session (COLUMNS
+        expansion, UNION BY NAME alignment, DML ``* REPLACE`` reorder),
+        then transpiles, and records the result-frame adjustments that
+        no text rewrite can express. Any other dialect passes through.
+
+        Transpile exactly ONCE per statement: the literal-escape pass
+        (dialect.py step 10) is deliberately not idempotent."""
+        if dialect != "duckdb":
+            return PreparedSql(sql)
+        from swanlake_spark.functions import transpile_duckdb
+        from swanlake_spark.functions.dialect import (
+            pivot_adjustments,
+            replace_position_probe,
+        )
+
+        # DuckDB zero-fills empty PIVOT count cells and names
+        # single-ALIASED-aggregate pivot columns `<value>_<agg>` where
+        # Spark drops the agg alias (see apply_pivot_adjustments).
+        pivot = pivot_adjustments(sql)
+        if re.search(r"\bCOLUMNS\s*\(", sql, re.IGNORECASE):
+            sql = self._expand_columns_star(sql)
+        if re.search(r"\bBY\s+NAME\b", sql, re.IGNORECASE):
+            sql = self._rewrite_union_by_name(sql)
+        # `* REPLACE` keeps each replaced column at its original star
+        # position in DuckDB; the transpiled star-EXCEPT form appends
+        # them at the end. The probe (same statement, bare `*`)
+        # analyzes to DuckDB's column order; the result frame is
+        # reordered to it (analysis only — never runs).
+        probe_raw = replace_position_probe(sql)
+        if probe_raw is not None:
+            # a result-frame reorder can't reach DML: an INSERT binds
+            # its source select POSITIONALLY, so the end-position
+            # REPLACE columns would write swapped VALUES (ADVICE r11).
+            # Rewrite the DML's source select to the probe's column
+            # order before execution.
+            sql = self._reorder_replace_dml(sql)
+            probe_raw = replace_position_probe(sql)
+        return PreparedSql(
+            transpile_duckdb(sql),
+            pivot,
+            transpile_duckdb(probe_raw) if probe_raw is not None else None,
+        )
 
     def _apply_replace_order(
         self, res: QueryResult, probe_sql: str, args: list | None
@@ -1271,13 +1301,16 @@ class Engine:
 
     # -- schema probes -----------------------------------------------------
 
-    def schema_for_query(self, sql: str) -> T.StructType:
+    def schema_for_query(self, sql: str, dialect: str | None = None) -> T.StructType:
         """Result schema without executing (Catalyst analysis only) —
-        the reference achieves this by preparing and not fetching."""
-        one = split_statements(strip_select_locks(sql).sql)
+        the reference achieves this by preparing and not fetching. The
+        statement takes the same dialect front door as :meth:`query`."""
+        prep = self.prepare(sql, dialect)
+        one = split_statements(strip_select_locks(prep.sql).sql)
         if len(one) != 1:
             raise InvalidArgument("schema_for_query takes a single statement")
-        return self.spark.sql(one[0]).schema
+        res = QueryResult(self.spark.sql(one[0]), None, is_query=True)
+        return prep.finish(self, res).df.schema
 
     def table_schema(self, name: str) -> T.StructType:
         return self.spark.table(name).schema

@@ -290,16 +290,6 @@ class FlightSqlServer(fl.FlightServerBase):
         sid = (mw.session_id if mw else None) or "flight-anonymous"
         return self.engine.sessions.get_or_create(sid), sid
 
-    def _session_engine(self, sess):
-        """Engine bound to the session's Spark fork, so schema probes and
-        metadata see the session's temp views (the same fork
-        ``Session.query`` executes against)."""
-        from swanlake_spark.engine import Engine
-
-        eng = Engine(spark=sess.spark)
-        eng.metrics = self.engine.metrics
-        return eng
-
     @staticmethod
     def _error(exc: Exception):
         """Map the engine exception taxonomy onto Flight/gRPC statuses,
@@ -336,8 +326,10 @@ class FlightSqlServer(fl.FlightServerBase):
                 schema = pa.schema([])
                 if returns_rows:
                     try:
+                        # the session's engine and dialect: the schema
+                        # DoGet's Session.query will produce
                         schema = _spark_to_arrow_schema(
-                            self._session_engine(sess).schema_for_query(sql)
+                            sess.bound.schema_for_query(sql, sess.dialect)
                         )
                     except InvalidArgument:
                         pass  # multi-statement script: schema at DoGet time
@@ -406,7 +398,7 @@ class FlightSqlServer(fl.FlightServerBase):
     # -- metadata results --------------------------------------------------
 
     def _metadata_table(self, name: str, payload: bytes, sess) -> pa.Table:
-        eng = self._session_engine(sess)
+        eng = sess.bound  # sees the session's temp views
         fields = pb_fields(payload)
         if name == "CommandGetCatalogs":
             return pa.Table.from_pydict(

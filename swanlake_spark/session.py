@@ -31,6 +31,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from swanlake_spark.engine import Engine, PreparedSql
 from swanlake_spark.errors import (
     EngineError,
     FailedPrecondition,
@@ -183,6 +184,11 @@ class Session:
 
         for sf_dir, tables in getattr(engine, "_attached_warehouses", []):
             register_tables(self.spark, sf_dir, tables)
+        # this session's engine, built once: the parent's config and
+        # metrics over this fork, so a client's SET survives from one
+        # statement to the next
+        self.bound = Engine(spark=self.spark, config=engine.config)
+        self.bound.metrics = engine.metrics
         self.created_at = time.time()
         self.last_used = time.time()
         self._handles: dict[int, PreparedStatement] = {}
@@ -198,9 +204,7 @@ class Session:
         # client dialect (EngineConfig.client_dialect): "duckdb"
         # transpiles every statement this session runs — the
         # reference's ADBC/Flight clients speak DuckDB SQL
-        self.dialect: str | None = getattr(
-            getattr(engine, "config", None), "client_dialect", None
-        )
+        self.dialect: str | None = engine.config.client_dialect
 
     def touch(self) -> None:
         self.last_used = time.time()
@@ -223,55 +227,23 @@ class Session:
         not idempotent, so re-transpiling stored text would corrupt
         backslash-bearing literals."""
         self.touch()
-        from swanlake_spark.engine import Engine, apply_pivot_adjustments
-
-        eng = Engine(spark=self.spark)
-        eng.metrics = self.engine.metrics
-        pivot_adj: tuple = ([], {})
-        replace_probe: str | None = None
-        if self.dialect == "duckdb" and pre_transpiled:
+        eng = self.bound
+        if pre_transpiled:
             from swanlake_spark.functions.dialect import pivot_adjustments
 
-            pivot_adj = pivot_adjustments(sql)
-        if self.dialect == "duckdb" and not pre_transpiled:
-            from swanlake_spark.functions import transpile_duckdb
-            from swanlake_spark.functions.dialect import (
-                pivot_adjustments,
-                replace_position_probe,
-            )
-
-            # transpile HERE (not via eng.query's dialect arg) so the
+            prep = PreparedSql(sql)
+            if self.dialect == "duckdb":
+                prep.pivot = pivot_adjustments(sql)
+        else:
+            # prepared HERE (not via eng.query's dialect arg) so the
             # transactional and literal-binding paths below also see
             # conventional SQL. `?` markers outside literals survive
             # textual rewrites: _transform_calls refuses any rewrite
             # whose call carries a bare marker (duplication/reorder
             # would corrupt positional binding — it fails loud at
-            # analysis instead). PIVOT count zero-fill/rename applies
-            # on the result below, same as the engine's dialect path.
-            # The schema-probe rewrites (COLUMNS expansion, UNION BY
-            # NAME alignment, DML * REPLACE reorder — r12) run here
-            # too, against THIS session's Spark fork, so the
-            # client_dialect wire path reaches them.
-            if re.search(r"\bCOLUMNS\s*\(", sql, re.IGNORECASE):
-                sql = eng._expand_columns_star(sql)
-            if re.search(r"\bBY\s+NAME\b", sql, re.IGNORECASE):
-                sql = eng._rewrite_union_by_name(sql)
-            probe_raw = replace_position_probe(sql)
-            if probe_raw is not None:
-                sql = eng._reorder_replace_dml(sql)
-                probe_raw = replace_position_probe(sql)
-            pivot_adj = pivot_adjustments(sql)
-            sql = transpile_duckdb(sql)
-            if probe_raw is not None:
-                # result-frame reorder for SELECT * REPLACE (the
-                # session path used to be a documented carve-out)
-                replace_probe = transpile_duckdb(probe_raw)
-
-        def _finish(res):
-            apply_pivot_adjustments(res, *pivot_adj)
-            if replace_probe is not None:
-                eng._apply_replace_order(res, replace_probe, None)
-            return res
+            # analysis instead).
+            prep = eng.prepare(sql, self.dialect)
+        sql = prep.sql
         try:
             if params and self.txn_id is None and classify(sql).all_queries:
                 # Native parameterized SQL (typed, injection-safe — the
@@ -285,14 +257,14 @@ class Session:
                 # literal rendering (engine-routed statements — COW DML,
                 # PK-checked INSERT, COPY — can't resolve markers anyway).
                 try:
-                    return _finish(eng.query(sql, args=list(params)))
+                    return prep.finish(eng, eng.query(sql, args=list(params)))
                 except EngineError:
                     pass
             if params:
                 sql = bind_parameters(sql, params)
             if self.txn_id is not None:
-                return _finish(self._transactional_execute(eng, sql))
-            return _finish(eng.query(sql))
+                return prep.finish(eng, self._transactional_execute(eng, sql))
+            return prep.finish(eng, eng.query(sql))
         finally:
             # touch on completion too: a query running longer than the
             # idle timeout must not leave the session looking idle to
@@ -306,26 +278,10 @@ class Session:
 
     def create_prepared_statement(self, sql: str, ephemeral: bool = False) -> PreparedStatement:
         self.touch()
-        if self.dialect == "duckdb":
-            from swanlake_spark.engine import Engine
-            from swanlake_spark.functions import transpile_duckdb
-            from swanlake_spark.functions.dialect import (
-                replace_position_probe,
-            )
-
-            # stored transpiled, so classification, placeholder
-            # counting, parameter-schema inference, and the NULL-probe
-            # schema path all see conventional SQL. Schema-probe
-            # rewrites (COLUMNS, BY NAME, DML * REPLACE — r12) apply
-            # at prepare time against this session's fork.
-            eng = Engine(spark=self.spark)
-            if re.search(r"\bCOLUMNS\s*\(", sql, re.IGNORECASE):
-                sql = eng._expand_columns_star(sql)
-            if re.search(r"\bBY\s+NAME\b", sql, re.IGNORECASE):
-                sql = eng._rewrite_union_by_name(sql)
-            if replace_position_probe(sql) is not None:
-                sql = eng._reorder_replace_dml(sql)
-            sql = transpile_duckdb(sql)
+        # stored prepared, so classification, placeholder counting,
+        # parameter-schema inference, and the NULL-probe schema path
+        # all see conventional SQL
+        sql = self.bound.prepare(sql, self.dialect).sql
         stripped = strip_select_locks(sql).sql
         parsed = classify(stripped)
         handle = next(self._handle_seq)

@@ -2,6 +2,7 @@
 transport: swanlake-server/src/main.rs:115-122, handlers in
 swanlake-core/src/service/handlers/)."""
 
+import dataclasses
 import tempfile
 import uuid
 
@@ -50,6 +51,23 @@ class TestProtobufCodec:
         assert [b.decode() for b in pb_fields(buf)[4]] == ["TABLE", "VIEW"]
 
 
+@pytest.fixture(scope="module")
+def duckdb_flight(spark, engine, sf_dir):
+    """A server whose clients speak DuckDB SQL
+    (``EngineConfig.client_dialect``), on its own Spark session fork."""
+    from swanlake_spark.engine import Engine
+
+    eng = Engine(
+        spark=spark.newSession(),
+        config=dataclasses.replace(engine.config, client_dialect="duckdb"),
+    )
+    eng.attach_warehouse(sf_dir)
+    server, port = start_flight_server(eng)
+    yield f"grpc://127.0.0.1:{port}"
+    server.shutdown()
+    eng.sessions.stop_janitor()
+
+
 class TestFlightSqlQueries:
     def test_simple_query(self, flight):
         tbl = FlightSqlClient(flight).execute(
@@ -90,6 +108,30 @@ class TestFlightSqlQueries:
     def test_error_propagates_with_message(self, flight):
         with pytest.raises(EngineError, match="snarkle"):
             FlightSqlClient(flight).execute("SELECT * FROM snarkle_missing")
+
+
+class TestFlightSqlClientDialect:
+    @pytest.mark.parametrize("name", ["tpch_q3", "tpch_q18"])
+    def test_tpch_duckdb_spelling_gets_duckdb_answer(
+        self, duckdb_flight, sf_dir, name
+    ):
+        # both use strftime, a DuckDB-only spelling: the GetFlightInfo
+        # schema probe must take the dialect front door like DoGet does
+        from swanlake_spark.queries.tpch import TPCH_QUERIES
+        from swanlake_spark.testing import compare_frames, duck_connect
+
+        sql = TPCH_QUERIES[name].oracle
+        got = FlightSqlClient(duckdb_flight).execute(sql).to_pandas()
+        want = duck_connect(sf_dir).execute(sql).df()
+        assert len(want) > 0
+        assert compare_frames(got, want) == []
+
+    def test_set_persists_across_statements(self, duckdb_flight):
+        c = FlightSqlClient(duckdb_flight)
+        c.execute("SET spark.sql.shuffle.partitions=3")
+        c.execute("SELECT count(*) AS n FROM nation")
+        tbl = c.execute("SELECT '${spark.sql.shuffle.partitions}' AS v")
+        assert tbl.column("v").to_pylist() == ["3"]
 
 
 class TestFlightSqlUpdates:

@@ -90,6 +90,17 @@ class TestRegistry:
         with pytest.raises(Exception):
             s2.query("SELECT x FROM iso_v").collect()
 
+    def test_set_persists_across_statements(self, registry):
+        sess = registry.get_or_create(f"set_{uuid.uuid4().hex[:6]}")
+        sess.query("SET spark.sql.shuffle.partitions=3")
+        sess.query("SELECT 1 AS x").collect()
+        sess.query("SELECT 2 AS y").collect()
+        row = sess.query("SELECT '${spark.sql.shuffle.partitions}' AS v").collect()[0]
+        assert row.v == "3"
+        # the SET stays in this session
+        other = registry.get_or_create(f"set_{uuid.uuid4().hex[:6]}")
+        assert other.spark.conf.get("spark.sql.shuffle.partitions") != "3"
+
 
 class TestPreparedStatements:
     def test_query_with_params(self, registry):

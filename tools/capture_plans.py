@@ -1,12 +1,14 @@
 """Capture ``explain("formatted")`` for bench-suite entries.
 
-Writes one ``plans/r12/<key>_<tag>.txt`` per entry (tag = before/after),
+Writes one ``<out_dir>/<key>_<tag>.txt`` per entry (tag = before/after),
 using the same EngineConfig + per-entry exec_conf the bench applies, so
 the captured plan is the plan the bench times. DataFrame-building
 side-effect entries (matview/CDC/YCSB-write classes) capture the plan of
 their final read.
 
-Usage: python tools/capture_plans.py <tag> [name_filter,names...]
+Usage: python tools/capture_plans.py <out_dir> <tag> [name_filter,names...]
+
+``out_dir`` is the round's plan directory, e.g. ``plans/r14``.
 """
 
 from __future__ import annotations
@@ -20,16 +22,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, tag = sys.argv[1], sys.argv[2]
     only = [
-        p.strip() for p in (sys.argv[2] if len(sys.argv) > 2 else "").split(",")
+        p.strip() for p in (sys.argv[3] if len(sys.argv) > 3 else "").split(",")
         if p.strip()
     ]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r12",
-    )
     os.makedirs(out_dir, exist_ok=True)
 
     from swanlake_spark.config import EngineConfig
